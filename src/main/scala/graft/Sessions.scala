@@ -13,6 +13,12 @@ import org.apache.spark.sql.SparkSession
   * broadcast outright). Locally we run `local[N]` with N shuffle
   * partitions; on a cluster the same code runs with
   * `spark.sql.shuffle.partitions` sized to executors.
+  *
+  * `limit`/`head`/`take` keep Spark's default ramp (1 partition, then
+  * 4, 16, ...), so a `head()` on a large scan reads one partition. The
+  * engine's own guarded probes, which read their whole input when under
+  * their cap, are one job each through [[graft.Probe]] instead of a
+  * session-wide `spark.sql.limit.initialNumPartitions`.
   */
 object Sessions {
   def local(cpus: Int = Runtime.getRuntime.availableProcessors.min(32)): SparkSession =
@@ -48,20 +54,6 @@ object Sessions {
     .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
     .config("spark.sql.adaptive.skewJoin.enabled", "true")
     .config("spark.sql.autoBroadcastJoinThreshold", (64L << 20).toString)
-    // Limit-probe economy (r16): executeTake's default ramp (1
-    // partition, then 4, 16, ...) schedules 2-3 JOBS for every guarded
-    // limit-probe collect in the engine (span/scrub/CC/line-dedup
-    // probes, ANN query-vector head()s) because an under-cap probe by
-    // definition EXHAUSTS its input — the ramp only ever helps when
-    // the first partitions satisfy the limit. Start at the session's
-    // parallelism so a probe is ONE job (measured: 3 collect jobs → 1
-    // on the CC pair probe, 2 head() jobs → 1 on every ANN query
-    // fixture). Scale note: this is keyed to the same dial as
-    // spark.sql.shuffle.partitions — a cluster deployment that sizes
-    // partitions re-dials both together; probes over aggregate outputs
-    // have exactly that many partitions, so one round stays one job.
-    .config("spark.sql.limit.initialNumPartitions",
-      math.max(1, shufflePartitions).toString)
     // Split-size floor: Spark's split planning uses max(openCostInBytes,
     // totalBytes/parallelism) capped by maxPartitionBytes. The 4 MB
     // default models HDFS-era file-open latency and single-threads any

@@ -72,48 +72,6 @@ object Dedup {
     */
   val StageDirConf = "graft.dedup.stageDir"
 
-  /** Materialize a reusable operator stage: to parquet when `stageDir`
-    * is given or [[StageDirConf]] is set (the 100 TB path — the stage
-    * is an index that belongs on distributed storage, survives
-    * executor loss, and is shareable across runs), else an
-    * executor-storage persist (interactive sizes). `eager` forces
-    * materialization in the persist branch so upstream persists can be
-    * released immediately; a parquet write is always eager.
-    */
-  private[operators] def stage(
-      d: DataFrame, stageDir: Option[String], eager: Boolean = false): DataFrame =
-    stageDir.orElse(
-      Option(d.sparkSession.conf.get(StageDirConf, null))
-        .map(base => s"$base/stage_${java.util.UUID.randomUUID()}")) match {
-      case Some(dir) =>
-        d.write.mode("overwrite").parquet(dir)
-        d.sparkSession.read.parquet(dir)
-      case None =>
-        val p = d.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        if (eager) p.count()
-        p
-    }
-
-  /** [[stage]] (always eager) that also returns the staged row count —
-    * the materializing action IS a count (the persist branch) or makes
-    * one metadata-only (parquet footers), so a caller that needs the
-    * count afterwards should take it from here instead of paying a
-    * second scheduled job over the stage (r15).
-    */
-  private[operators] def stageCounted(
-      d: DataFrame, stageDir: Option[String]): (DataFrame, Long) =
-    stageDir.orElse(
-      Option(d.sparkSession.conf.get(StageDirConf, null))
-        .map(base => s"$base/stage_${java.util.UUID.randomUUID()}")) match {
-      case Some(dir) =>
-        d.write.mode("overwrite").parquet(dir)
-        val back = d.sparkSession.read.parquet(dir)
-        (back, back.count()) // parquet: metadata-only footer count
-      case None =>
-        val p = d.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        (p, p.count()) // the eager materialization is the count
-    }
-
   /** Distinct word n-gram shingles of lowercased text.
     *
     * Built by zipping n shifted copies of the token array and
@@ -197,7 +155,7 @@ object Dedup {
         graft.functions.TextSignatures
           .shingleHashesCol(col(textCol), shingleN).as("_hsh"))
       .filter(size(col("_hsh")) > 0)
-    val hashedShingles = stage(hashedRaw, stageDir)
+    val hashedShingles = graft.Probe.stage(hashedRaw, stageDir).df
     val sig = hashedShingles
       .withColumn("_sig", graft.functions.TextSignatures
         .minHashSigCol(col("_hsh"), numHashes))
@@ -246,13 +204,13 @@ object Dedup {
         // mass-duplicated corpus can inflate them past executor
         // memory — past the cap the semi filter degrades to a
         // shuffled join, cost proportional to duplication
-        val (hotBuckets, nHot) = stageCounted(banded.groupBy("band", "bucket")
+        val hot = graft.Probe.stage(banded.groupBy("band", "bucket")
           .agg(count(lit(1)).as("_n"))
           .filter(col("_n").between(2, maxBucketSize))
-          .select("band", "bucket"), stageDir)
+          .select("band", "bucket"), stageDir, eager = true)
         val hotSide =
-          if (nHot <= SpanBroadcastLimit) broadcast(hotBuckets)
-          else hotBuckets
+          if (hot.count <= SpanBroadcastLimit) broadcast(hot.df)
+          else hot.df
         bucketLists(banded.join(hotSide, Seq("band", "bucket")))
       }
     val candidates = collisionBuckets
@@ -445,8 +403,8 @@ object Dedup {
       collectLimit: Int, assumeCanonical: Boolean)
       : Option[Array[org.apache.spark.sql.Row]] = {
     if (collectLimit <= 0) return None
-    // ONE job either way: collect at most limit+1 pairs; overflow ⇒
-    // the graph is genuinely large ⇒ distributed. In the canonicalized
+    // ONE guarded probe either way: overflow ⇒ the graph is genuinely
+    // large ⇒ distributed. In the canonicalized
     // branch greatest/least skip NULLs, so a null-partner row
     // (a, null) canonicalizes to the self-pair (a, a) — singleton
     // membership survives the orientation dedup (the contract covers
@@ -457,8 +415,7 @@ object Dedup {
         .select(greatest(col(aCol), col(bCol)).as(aCol),
           least(col(aCol), col(bCol)).as(bCol))
         .distinct()
-    val head = probe.limit(collectLimit + 1).collect()
-    if (head.length <= collectLimit) Some(head) else None
+    graft.Probe.collectAtMost(probe, collectLimit)
   }
 
   def connectedComponents(
@@ -809,11 +766,12 @@ object Dedup {
     // sort each doc's (df, hash) postings by global rarity IN-ROW
     // (array_sort) instead of a corpus-wide window sort — a hash
     // aggregate scales; a row_number window over every posting doesn't.
-    val (byDoc, nDocs) = stageCounted(
+    val byDocStage = graft.Probe.stage(
       exploded.join(dfs, "_h")
         .groupBy("_id")
         .agg(array_sort(collect_list(struct(col("_df"), col("_h")))).as("_items")),
-      stageDir)
+      stageDir, eager = true)
+    val byDoc = byDocStage.df
     // The compact per-doc index is materialized NOW (write or eager
     // persist) so the full posting list — the operator's largest
     // intermediate — is released instead of staying pinned for the
@@ -846,7 +804,7 @@ object Dedup {
       case CandidateCap.Max(m)    => Some(m)
       // Auto sizes off the corpus itself: the doc count came free with
       // byDoc's materializing stage — no extra job
-      case CandidateCap.Auto      => Some(100L * math.max(nDocs, 1L))
+      case CandidateCap.Auto      => Some(100L * math.max(byDocStage.count, 1L))
     }
     capValue.foreach { cap =>
       // exact size of the candidate self-join below: Σ_h c_h·(c_h−1)/2
@@ -958,82 +916,54 @@ object Dedup {
     val dupPlan = dupSpanFirsts(grams, inputBytes)
     val staged = stageDir.isDefined ||
       spark.conf.get(StageDirConf, null) != null
-    probeDupSpansLocal(spark, dupPlan,
-      bigPostingCorpus(spark, inputBytes)) match {
-      case Right(local) =>
-        // Driver-local fast path (r15): the duplicated-span table came
-        // back whole from the guarded limit-probe, so NOTHING is
-        // cached — the probe joins a plan-time-broadcast local
-        // relation and the flagged plan stays LAZY (its one execution
-        // is the caller's action; the eager stage below existed only
-        // to release the persisted dupSpans before returning). With a
-        // stage dir the result is still STAGED (r15 ADVICE — the
-        // materialized/shareable contract holds on every route).
-        val flagged = grams.join(broadcast(local), "_g")
-          .filter(col("_id") > col("_first"))
-          .select(col("_id").as(idCol)).distinct()
-        if (staged) stage(flagged, stageDir) else flagged
-      case Left(dupSpans) =>
-        // over-cap: on the big-corpus route the probe already persisted
-        // dupPlan and computed (part of) it — the count completes the
-        // cache instead of recomputing the posting shuffle (r15 ADVICE)
-        val nDup = dupSpans.count()
-        val probe =
-          if (nDup <= SpanBroadcastLimit) grams.join(broadcast(dupSpans), "_g")
-          else grams.join(dupSpans, "_g")
-        val flagged = stage(
-          probe.filter(col("_id") > col("_first"))
-            .select(col("_id").as(idCol)).distinct(),
-          stageDir, eager = true)
-        dupSpans.unpersist()
-        flagged
+    val dup = probeDupSpans(spark, dupPlan, inputBytes)
+    def flag(dupSpans: DataFrame): DataFrame = grams.join(dupSpans, "_g")
+      .filter(col("_id") > col("_first"))
+      .select(col("_id").as(idCol)).distinct()
+    if (dup.isLocal) {
+      // Driver-local fast path (r15): the duplicated-span table came
+      // back whole from the guarded probe, so NOTHING is cached — the
+      // probe joins a plan-time-broadcast local relation and the
+      // flagged plan stays LAZY (its one execution is the caller's
+      // action). With a stage dir the result is still STAGED (r15
+      // ADVICE — the materialized/shareable contract holds on every
+      // route).
+      val flagged = flag(broadcast(dup.df))
+      if (staged) graft.Probe.stage(flagged, stageDir).df else flagged
+    } else {
+      // over-cap: the staged aggregate is materialized and counted;
+      // the flagged ids are staged eagerly so it can be released
+      val flagged = graft.Probe.stage(
+        flag(if (dup.count <= SpanBroadcastLimit) broadcast(dup.df) else dup.df),
+        stageDir, eager = true).df
+      dup.release()
+      flagged
     }
   }
 
-  /** Guarded limit-probe for the span family's duplicated-span table:
-    * collect up to [[DupSpanLocalLimit]]+1 rows in the materializing
-    * job itself — at or under the cap the rows ARE the complete table
-    * and serve as a plan-time-broadcast local relation (`Right`; one
-    * scheduled job, no executor cache retained — the tiny cache the
-    * probe wrote is dropped before returning); over it, `Left` with
-    * the ALREADY-PERSISTED aggregate, so the caller's fallback count
-    * completes the cache the probe partially filled instead of
-    * recomputing the posting shuffle from scratch (r15 ADVICE — the
-    * over-cap corpora are exactly the massively-duplicated ones where
-    * that aggregate is most expensive). The cap bounds driver memory
-    * at ~25 MB of Rows (two longs each) and is conf-dialable
-    * ([[graft.Conf.DupSpanLocalLimitKey]]).
+  /** Guarded probe for the span family's duplicated-span table: at or
+    * under [[DupSpanLocalLimit]] rows (conf-dialable,
+    * [[graft.Conf.DupSpanLocalLimitKey]]; ~25 MB of driver Rows at the
+    * default) it comes back as a plan-time-broadcast local relation —
+    * one scheduled job, no executor cache retained; over it, a
+    * persisted and counted aggregate the caller must release.
     *
-    * `persistForFallback` gates the pre-probe persist on the SAME
-    * route signal as [[dupSpanFirsts]] (input past the posting-shuffle
-    * threshold): small corpora probe the raw plan — cache-free, and an
-    * over-cap recompute there is one cheap aggregate — while large
-    * corpora (where over-cap is likely AND the posting shuffle is the
-    * expensive thing) pay one tiny cache fill so the fallback never
-    * recomputes it. Either way `Left` returns a PERSISTED aggregate
-    * the caller must unpersist.
+    * The pre-probe persist rides the SAME route signal as
+    * [[dupSpanFirsts]] (input past the posting-shuffle threshold):
+    * small corpora probe the raw plan cache-free, where an over-cap
+    * recompute is one cheap aggregate, while large corpora (where
+    * over-cap is likely AND the posting shuffle is the expensive
+    * thing) pay one cache fill so the fallback never recomputes it
+    * (r15 ADVICE).
     */
-  private def probeDupSpansLocal(
+  private def probeDupSpans(
       spark: org.apache.spark.sql.SparkSession,
-      dupPlan: DataFrame, persistForFallback: Boolean): Either[DataFrame, DataFrame] = {
-    val cap = graft.Conf.count(
-      spark, graft.Conf.DupSpanLocalLimitKey, DupSpanLocalLimit)
-    val p =
-      if (persistForFallback)
-        dupPlan.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else dupPlan
-    val rows = p.limit(graft.Conf.probeLimit(cap)).collect()
-    if (rows.length <= cap) {
-      if (persistForFallback) p.unpersist(false)
-      Right(spark.createDataFrame(
-        java.util.Arrays.asList(rows: _*), dupPlan.schema))
-    } else Left(
-      if (persistForFallback) p
-      else dupPlan
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-  }
+      dupPlan: DataFrame, inputBytes: BigInt): graft.Probe.Staged =
+    graft.Probe.collectOrStage(dupPlan,
+      graft.Conf.count(spark, graft.Conf.DupSpanLocalLimitKey, DupSpanLocalLimit),
+      persistFirst = bigPostingCorpus(spark, inputBytes))
 
-  /** The [[probeDupSpansLocal]] persist gate: true past the
+  /** The [[probeDupSpans]] persist gate: true past the
     * posting-shuffle route threshold (resolved like [[dupSpanFirsts]]).
     */
   private def bigPostingCorpus(
@@ -1041,7 +971,7 @@ object Dedup {
     inputBytes > graft.Conf.bytes(
       spark, graft.Conf.PostingShuffleBytesKey, PostingShuffleBytes)
 
-  /** Row cap for [[probeDupSpansLocal]] — 2^18 duplicated spans, the
+  /** Row cap for [[probeDupSpans]] — 2^18 duplicated spans, the
     * same driver-graph scale [[connectedComponents]]' local fast path
     * accepts. Under it the span probe runs cache-free; over it the
     * persisted shape takes over (and [[SpanBroadcastLimit]] still
@@ -1195,115 +1125,58 @@ object Dedup {
     // the r13 sweep's remaining span-family superlinear.
     val spark = df.sparkSession
     val inputBytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    val bigCorpus = bigPostingCorpus(spark, inputBytes)
     val dupPlan = dupSpanFirsts(grams, inputBytes)
-    // Same guarded limit-probe as spanDuplicateIds (r15): under the
-    // cap the duplicated-span table serves as a cache-free local
-    // broadcast relation; over it, the persisted shape as before.
-    var dupCached: Option[DataFrame] = None
-    val probe = probeDupSpansLocal(spark, dupPlan, bigCorpus) match {
-      case Right(local) => grams.join(broadcast(local), "_g")
-      case Left(dupSpans) =>
-        // over-cap: on the big-corpus route the probe left the
-        // aggregate persisted — the count completes the cache instead
-        // of recomputing the posting shuffle (r15 ADVICE)
-        dupCached = Some(dupSpans)
-        val nDup = dupSpans.count()
-        if (nDup <= SpanBroadcastLimit) grams.join(broadcast(dupSpans), "_g")
-        else grams.join(dupSpans, "_g")
-    }
+    // Same guarded probe as spanDuplicateIds (r15): under the cap the
+    // duplicated-span table serves as a cache-free local broadcast
+    // relation; over it, the persisted and counted shape.
+    val dup = probeDupSpans(spark, dupPlan, inputBytes)
+    val probe =
+      if (dup.isLocal || dup.count <= SpanBroadcastLimit) grams.join(broadcast(dup.df), "_g")
+      else grams.join(dup.df, "_g")
     val hitsPlan = probe.filter(col("_id") > col("_first"))
       .groupBy("_id")
       .agg(sort_array(collect_list(col("_pos"))).as("_starts"))
     val hitsCap = graft.Conf.count(
       spark, graft.Conf.ScrubHitsLimitKey, ScrubHitsBroadcastLimit)
-    // Guarded limit(cap+1) probe (r15): compute the hit table ONCE and
-    // collect it in the same action — cap+1 rows back means "over the
-    // cap" (fall through to the staged shapes below, which recompute);
-    // at or under it the rows ARE the complete table and serve as a
-    // LOCAL relation. The previous shape paid three scheduled jobs on
-    // the common under-cap path (eager persist+count, a second count,
-    // then the collect the broadcast needed anyway) — this is one.
-    // Dir-staged runs skip the probe: the stage is the 100 TB index
-    // and belongs on distributed storage whatever its size.
-    val probed: Option[Array[org.apache.spark.sql.Row]] =
-      if (stageDir.isDefined || spark.conf.get(StageDirConf, null) != null) None
-      else {
-        // persist-before-probe on the big-corpus route only (r16): an
-        // over-cap probe there leaves the hit aggregate cached, so the
-        // eager stage below COMPLETES the cache instead of recomputing
-        // the posting join + aggregate from scratch (r15 ADVICE —
-        // stage()'s re-persist of the same plan is a no-op); small
-        // corpora probe the raw plan cache-free, where an over-cap
-        // recompute is one cheap aggregate. The under-cap path drops
-        // any cache before returning.
-        val p =
-          if (bigCorpus) hitsPlan
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          else hitsPlan
-        val rows = p.limit(graft.Conf.probeLimit(hitsCap)).collect()
-        if (rows.length <= hitsCap) {
-          if (bigCorpus) p.unpersist(false)
-          Some(rows)
-        } else None
-      }
-    lazy val hits = stage(hitsPlan, stageDir, eager = true)
-    lazy val nHit = hits.count()
-    // Cache hygiene (r14, ADVICE): the eager stage PERSISTS when no
-    // stage dir is configured, and the returned plan used to keep
-    // that cache alive past the call — a leak across long sessions.
-    // Under the broadcast cap the hit rows are collected to the driver
-    // (exactly what the broadcast exchange would do at execution
-    // anyway) and served from a LOCAL relation, so nothing stays
-    // cached; past the cap on a LOCAL master the materialized stage is
-    // spilled to a temp parquet (same lifetime the cache had — the
-    // JVM's — but disk, not executor memory) and the cache releases
-    // too; past the cap on a REAL cluster without a stage dir the
-    // persist is kept — a driver-local temp path is not a shared
-    // filesystem there (r15, ADVICE). Dir-staged runs (the 100 TB
-    // configuration) were never cached and pass through.
+    // Guarded probe: at or under the cap the hit table serves as a
+    // LOCAL broadcast relation (one job, nothing cached). Past it,
+    // dir-staged runs (the 100 TB configuration) keep the parquet
+    // stage; a LOCAL master spills the stage to temp parquet (disk,
+    // not executor memory) and releases its cache (r14/r15 ADVICE); a
+    // REAL cluster without a stage dir keeps the persist — a
+    // driver-local temp path is not a shared filesystem there. The
+    // probe persists first on the big-corpus route only (r16), so an
+    // over-cap probe there fills the cache instead of recomputing the
+    // posting join + aggregate.
     val hitSide =
-      if (probed.isDefined) {
-        broadcast(spark.createDataFrame(
-          java.util.Arrays.asList(probed.get: _*), hitsPlan.schema))
-      } else if (nHit <= hitsCap) {
-        val local = spark.createDataFrame(
-          java.util.Arrays.asList(hits.collect(): _*), hits.schema)
-        hits.unpersist(false)
-        broadcast(local)
-      } else if (stageDir.isDefined ||
-          spark.conf.get(StageDirConf, null) != null) {
-        hits // already parquet-backed, nothing cached
-      } else if (spark.sparkContext.isLocal) {
-        // Local master only (r15, ADVICE): a driver-local `file:` temp
-        // path is visible to every task here, so spilling the cached
-        // stage to temp parquet trades executor memory for disk
-        // safely. The dir lives under LocalFs' SHARED temp base — one
-        // JVM shutdown hook total, not one per call.
-        val dir = new java.io.File(
-          graft.LocalFs.tempDir("graft_scrub_hits"), "hits").toString
-        hits.write.mode("overwrite").parquet(dir)
-        hits.unpersist(false)
-        spark.read.parquet(dir)
+      if (stageDir.isDefined || spark.conf.get(StageDirConf, null) != null) {
+        val hits = graft.Probe.stage(hitsPlan, stageDir).df
+        graft.Probe.localAtMost(hits, hitsCap).map(broadcast).getOrElse(hits)
       } else {
-        // Multi-node cluster WITHOUT a stage dir: executors would
-        // write a driver-local temp path onto THEIR disks and the
-        // driver-side read would see nothing — a hard failure, or
-        // silently unscrubbed docs. Keep the (already-materialized)
-        // executor-storage persist instead: cluster-correct, costs
-        // only cache lifetime. The 100 TB configuration sets
-        // [[StageDirConf]] and never reaches this branch.
-        org.slf4j.LoggerFactory.getLogger(getClass).warn(
-          s"scrubSpanDuplicates: hit table ($nHit rows) exceeds the " +
-            s"broadcast cap and no stage dir is set; keeping it in " +
-            s"executor storage. Set ${StageDirConf} to stage large " +
-            s"scrubs on distributed storage.")
-        hits
+        val hits = graft.Probe.collectOrStage(hitsPlan, hitsCap,
+          persistFirst = bigPostingCorpus(spark, inputBytes))
+        if (hits.isLocal) broadcast(hits.df)
+        else if (spark.sparkContext.isLocal) {
+          // the dir lives under LocalFs' SHARED temp base — one JVM
+          // shutdown hook total, not one per call
+          val dir = new java.io.File(
+            graft.LocalFs.tempDir("graft_scrub_hits"), "hits").toString
+          hits.df.write.mode("overwrite").parquet(dir)
+          hits.release()
+          spark.read.parquet(dir)
+        } else {
+          org.slf4j.LoggerFactory.getLogger(getClass).warn(
+            s"scrubSpanDuplicates: hit table (${hits.count} rows) exceeds the " +
+              s"broadcast cap and no stage dir is set; keeping it in " +
+              s"executor storage. Set ${StageDirConf} to stage large " +
+              s"scrubs on distributed storage.")
+          hits.df
+        }
       }
-    // the hit side is materialized by now on every branch (probe
-    // collect, eager stage, or the forced nHit count) — the posting
-    // aggregate's cache (fallback path only) can go
-    dupCached.foreach(_.unpersist())
+    // the hit side is materialized by now on every branch (probe,
+    // parquet stage, or the staged count) — the posting aggregate's
+    // cache (over-cap only) can go
+    dup.release()
     val scrubbed = df
       .join(hitSide, col(idCol) === col("_id"), "left")
       .withColumn("_scrub", graft.functions.SpanScrub

@@ -38,7 +38,8 @@ object LineDedup {
   /** Row cap for the frequent-line driver collect (8 B a key → ≤ ~8 MB
     * at the cap), conf-dialable via
     * [[graft.Conf.LineFrequentLocalLimitKey]]; past it the broadcast
-    * builds from an eager executor-storage stage instead.
+    * builds from an eager executor-storage stage instead, which lives
+    * as long as the returned plan.
     */
   val FrequentLocalLimit: Long = 1L << 20
 
@@ -53,10 +54,10 @@ object LineDedup {
     require(minDocs >= 2, s"minDocs must be >= 2, got $minDocs")
     // the line stream feeds BOTH the frequency aggregate and the
     // flagging join: persist it while the TINY frequent set is built
-    // eagerly, then release — Dedup.stage's eager mode materializes
-    // `frequent` so the final (lazy) plan re-reads only the source,
-    // never a corpus-sized retained cache (the spanDuplicateIds /
-    // ngramJaccardPairs release pattern)
+    // eagerly, then release — the probe (or its eager stage)
+    // materializes `frequent` so the final (lazy) plan re-reads only
+    // the source, never a corpus-sized retained cache (the
+    // spanDuplicateIds / ngramJaccardPairs release pattern)
     val lines = docs.select(
         col(idCol).as("_id"),
         posexplode(split(col(textCol), java.util.regex.Pattern.quote(sep)))
@@ -66,38 +67,30 @@ object LineDedup {
 
     // distinct doc count per line key: map-side partial agg; the
     // output (distinct boilerplate candidates) is small by definition
-    // — and it was ALWAYS broadcast below, so collect it straight to a
-    // local relation in the materializing job itself (r15): one
-    // scheduled job instead of eager-persist + count + a broadcast
-    // build that re-read the cache, and nothing stays cached. The
-    // collect is GUARDED (r16, r15 ADVICE — the one r15 driver-collect
-    // with no row cap): past [[FrequentLocalLimit]] rows (pathological
-    // corpus: every line shared across minDocs docs) it falls back to
-    // the staged+broadcast r14 shape instead of collecting unbounded.
+    // — and it is ALWAYS broadcast below, so a guarded probe collects
+    // it straight to a local relation in the materializing job itself
+    // (r15): one scheduled job, nothing stays cached. Past
+    // [[FrequentLocalLimit]] rows (pathological corpus: every line
+    // shared across minDocs docs) it is staged instead — persisted and
+    // counted while `lines` is still cached. That stage lives as long
+    // as the returned plan (or until the pipeline run ends, see
+    // [[graft.Probe.releasingStages]]).
     val frequentPlan = lines
       .groupBy("_key")
       .agg(count_distinct(col("_id")).as("_docs"))
       .filter(col("_docs") >= minDocs)
       .select("_key")
-    val cap = graft.Conf.count(docs.sparkSession,
-      graft.Conf.LineFrequentLocalLimitKey, FrequentLocalLimit)
-    val probe = frequentPlan.limit(graft.Conf.probeLimit(cap)).collect()
-    val frequent =
-      if (probe.length <= cap)
-        docs.sparkSession.createDataFrame(
-          java.util.Arrays.asList(probe: _*), frequentPlan.schema)
-      else
-        // eager persist + count while `lines` is still cached; the
-        // broadcast build at execution reads this cache (its lifetime
-        // is the returned plan's — the bounded-leak trade only the
-        // pathological route pays)
-        Dedup.stage(frequentPlan, None, eager = true)
+    val frequent = graft.Probe.collectOrStage(frequentPlan,
+      graft.Conf.count(docs.sparkSession,
+        graft.Conf.LineFrequentLocalLimitKey, FrequentLocalLimit),
+      persistFirst = false)
+    if (!frequent.isLocal) frequent.count // fill the stage from `lines`
     lines.unpersist()
 
     // tag (not anti-join) so kept/removed counts come from the SAME
     // single doc-side aggregate — no per-doc side table to join back
     lines
-      .join(broadcast(frequent.withColumn("_bl", lit(true))), Seq("_key"), "left")
+      .join(broadcast(frequent.df.withColumn("_bl", lit(true))), Seq("_key"), "left")
       .groupBy("_id")
       .agg(
         array_join(

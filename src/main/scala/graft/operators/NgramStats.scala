@@ -83,7 +83,7 @@ object NgramStats {
   def topK(df: DataFrame, textCol: String, n: Int, k: Int,
       gramCol: String = "gram", countCol: String = "n",
       keptBroadcastLimit: Int = KeptBroadcastLimit,
-      tieGuardStatsBytes: Long = TieGuardStatsBytes): DataFrame = {
+      forceGuarded: Boolean = false): DataFrame = {
     require(n >= 1, s"ngram width must be >= 1, got $n")
     require(k >= 1, s"top-k must be >= 1, got $k")
     require(keptBroadcastLimit >= 0,
@@ -101,13 +101,10 @@ object NgramStats {
     val countsPlan = grams
       .groupBy(xxhash64(col("_g")).as("_h"))
       .agg(count(lit(1)).as("_c"))
-    // Single-probe fast path (r16) — see the docstring. The legacy
-    // `tieGuardStatsBytes` dial is kept as the forced-guarded escape
-    // hatch (< 0 skips the probe, the shape the route-parity spec
-    // exercises); its r15 stats-gate role is retired — the probe is
-    // strictly cheaper than both r15 shapes whenever it lands, and
-    // bounded when it does not.
-    if (tieGuardStatsBytes >= 0) {
+    // Single-probe fast path (r16) — see the docstring.
+    // `forceGuarded` skips it: the shape the route-parity spec
+    // exercises.
+    if (!forceGuarded) {
       val probeCap = math.min(keptBroadcastLimit.toLong, graft.Conf.count(
         df.sparkSession, graft.Conf.NgramKeptProbeLimitKey, KeptProbeLimit))
       val top = countsPlan.orderBy(col("_c").desc)
@@ -143,17 +140,11 @@ object NgramStats {
       if (topCounts.isNullAt(0)) return empty
       val threshold = topCounts.getLong(0)
       val kept = counts.filter(col("_c") >= threshold).select(col("_h"))
-      val keptProbe = kept.limit(keptBroadcastLimit + 1).collect()
-      val spark = df.sparkSession
-      import spark.implicits._
-      val filtered =
-        if (keptProbe.length <= keptBroadcastLimit) {
-          // local relation → plan-time broadcast, no executor cache
-          // retained by the returned plan
-          val local = keptProbe.map(_.getLong(0)).toSeq.toDF("_h")
-          grams.join(broadcast(local), xxhash64(col("_g")) === col("_h"))
-        } else grams.join(kept, xxhash64(col("_g")) === col("_h"))
-      finish(filtered)
+      // local relation → plan-time broadcast, no executor cache
+      // retained by the returned plan
+      val keptSide = graft.Probe.localAtMost(kept, keptBroadcastLimit)
+        .map(broadcast).getOrElse(kept)
+      finish(grams.join(keptSide, xxhash64(col("_g")) === col("_h")))
     } finally counts.unpersist(false)
   }
 
@@ -162,12 +153,6 @@ object NgramStats {
     * to a shuffled semi-join.
     */
   val KeptBroadcastLimit: Int = 1000000
-
-  /** Legacy dial (r15 stats gate, retired r16): any value ≥ 0 takes
-    * the single-probe fast path; < 0 forces the guarded persist shape
-    * (the route-parity escape hatch the spec exercises).
-    */
-  val TieGuardStatsBytes: Long = 8L << 20
 
   /** Default row cap for [[topK]]'s single-probe TakeOrdered (r16,
     * conf-dialable via [[graft.Conf.NgramKeptProbeLimitKey]]): must

@@ -86,17 +86,26 @@ object PipelineDag {
       observed: Map[String, Map[String, Any]] = Map.empty)
 
   /** Retry with linear backoff — reference policy (engine.py:84-96):
-    * attempt 1..max, sleep delay*attempt between failures.
+    * attempt 1..max, sleep delay*attempt between failures. Only
+    * non-fatal errors are retried. Deterministic failures
+    * (`AnalysisException`, `IllegalArgumentException`) fail at once,
+    * and an interrupt is never retried: the flag is re-set and the
+    * exception rethrown.
     */
   def withRetries[A](maxRetries: Int = 3, delayMs: Long = 100)(body: => A): A = {
     // plain while loop — a `return` inside a foreach lambda would throw
-    // NonLocalReturnControl and be swallowed by the catch below
+    // NonLocalReturnControl, a control throwable NonFatal leaves alone
     var last: Throwable = null
     var attempt = 1
     while (attempt <= maxRetries) {
       try return body
       catch {
-        case e: Throwable =>
+        case e: InterruptedException =>
+          Thread.currentThread().interrupt()
+          throw e
+        case e @ (_: org.apache.spark.sql.AnalysisException |
+            _: IllegalArgumentException) => throw e
+        case scala.util.control.NonFatal(e) =>
           last = e
           if (attempt < maxRetries) Thread.sleep(delayMs * attempt)
       }
@@ -200,7 +209,17 @@ object PipelineDag {
     def readStage(id: String): DataFrame = spark.read.parquet(stagePath(id))
   }
 
+  /** One run: every operator stage persisted while it builds and runs
+    * the DAG (e.g. minhash's shingle-hash stage) is released once the
+    * sinks have finished. The returned outputs stay valid, but reading
+    * them again recomputes instead of hitting a cache.
+    */
   private def executeCore(
+      spark: SparkSession, nodes: Seq[Node], edges: Seq[Edge],
+      state: Option[RunState], stageNodes: Set[String]): RunResult =
+    graft.Probe.releasingStages(runDag(spark, nodes, edges, state, stageNodes))
+
+  private def runDag(
       spark: SparkSession, nodes: Seq[Node], edges: Seq[Edge],
       state: Option[RunState], stageNodes: Set[String]): RunResult = {
     val order = topoSort(nodes, edges)

@@ -903,18 +903,17 @@ object PipelineJson {
     * request body — header row + RFC-4180-quoted cells, matching the
     * reference's "input file content as body" behavior.
     *
-    * The collect is capped at `maxRows` (one `limit(max+1)` job, so
-    * the overflow check itself never pulls the full input): beyond the
+    * The collect is a guarded probe capped at `maxRows` (one job that
+    * never pulls more than `maxRows`+1 rows a partition): beyond the
     * cap the node raises instead of silently OOMing the driver.
     */
   private def toCsvString(
       df: org.apache.spark.sql.DataFrame, maxRows: Long, nodeId: String): String = {
-    val capped = df.limit(math.min(maxRows, Int.MaxValue - 1L).toInt + 1).collect()
-    if (capped.length > maxRows)
+    val capped = graft.Probe.collectAtMost(df, maxRows).getOrElse(
       throw new IllegalStateException(
         s"invoke_http node '$nodeId': input exceeds max_body_rows=$maxRows — " +
           "the request body is materialized on the driver; raise max_body_rows " +
-          "only for genuinely bounded inputs, or use webhook_send for bulk export")
+          "only for genuinely bounded inputs, or use webhook_send for bulk export"))
     def cell(v: Any): String = {
       val s = if (v == null) "" else v.toString
       if (s.exists(c => c == ',' || c == '"' || c == '\n' || c == '\r'))

@@ -79,6 +79,10 @@ object Connectors {
 
     def read(spark: SparkSession): DataFrame = {
       val resp = client.send(request, HttpResponse.BodyHandlers.ofByteArray())
+      // 5xx: a transient server failure a retry policy may retry; 4xx
+      // is deterministic and fails at once
+      if (resp.statusCode() >= 500)
+        throw new java.io.IOException(s"HTTP ${resp.statusCode()} from $url")
       require(resp.statusCode() < 400, s"HTTP ${resp.statusCode()} from $url")
       val contentType = resp.headers.firstValue("content-type").orElse("")
       val fmt =

@@ -83,6 +83,9 @@ object Export {
         val payload = rowsToJson(schema, batch)
         graft.plans.PipelineDag.withRetries(maxRetries) {
           val code = transport.send(payload)
+          // 5xx is the server's transient failure (retried); 4xx is
+          // this request's fault and fails at once
+          if (code >= 500) throw new java.io.IOException(s"export transport returned $code")
           require(code < 400, s"export transport returned $code")
         }
       }

@@ -130,4 +130,10 @@ class BpeTrainSpec extends AnyFunSuite {
       minCount = 3L, maxWords = 10)
     assert(merges.nonEmpty)
   }
+
+  test("maxWords = Int.MaxValue cannot overflow the vocabulary guard") {
+    val docs = Seq((1L, "low lower newest widest low newest newest")).toDF("doc_id", "text")
+    assert(BpeTrain.train(docs, "text", numMerges = 4, maxWords = Int.MaxValue) ==
+      BpeTrain.train(docs, "text", numMerges = 4))
+  }
 }

@@ -108,6 +108,14 @@ class DedupSpec extends AnyFunSuite {
     assert(comp == Map(10L -> 10L, 20L -> 10L, 30L -> 10L))
   }
 
+  test("connectedComponents: collectLimit = Int.MaxValue cannot overflow the probe") {
+    val pairs = Seq((1L, 2L), (2L, 3L), (7L, 8L), (9L, 9L)).toDF("id_a", "id_b")
+    def comp(limit: Int) = Dedup.connectedComponents(pairs, collectLimit = limit)
+      .as[(Long, Long)].collect.toMap
+    assert(comp(Int.MaxValue) == comp(1 << 18))
+    assert(comp(Int.MaxValue) == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 7L -> 7L, 8L -> 7L, 9L -> 9L))
+  }
+
   test("connectedComponents matches a local union-find on a random graph") {
     val rnd = new scala.util.Random(7)
     val n = 80

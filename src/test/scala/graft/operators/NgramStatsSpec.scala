@@ -86,16 +86,16 @@ class NgramStatsSpec extends AnyFunSuite {
   test("tie-volume guard: past the cap the recount degrades to a shuffled join") {
     // k-th count = 1 → the kept set is (nearly) every distinct gram;
     // with the cap forced to 0 the recount must take the non-broadcast
-    // fallback and still return the identical exact table. The tie
-    // gate is forced shut (tieGuardStatsBytes = -1) so the guarded
+    // fallback and still return the identical exact table. The
+    // single-probe fast path is skipped (forceGuarded) so the guarded
     // persist + probe path is what's exercised — a tiny fixture would
-    // otherwise clear the r15 persist-economy gate and never probe.
+    // otherwise land on the fast path and never probe.
     val docs = Seq((1L, "a b c d e f g h"), (2L, "a b x")).toDF("doc_id", "text")
     val expected = NgramStats.topK(docs, "text", 2, 5)
       .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
     assert(expected.head == (("a b", 2L)))
     val fallback = NgramStats.topK(docs, "text", 2, 5, keptBroadcastLimit = 0,
-        tieGuardStatsBytes = -1L)
+        forceGuarded = true)
       .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
     assert(fallback == expected)
   }
@@ -112,7 +112,7 @@ class NgramStatsSpec extends AnyFunSuite {
     // forced-guarded run must return the identical table.
     val fast = NgramStats.topK(docs, "text", 3, 25)
     val guarded = NgramStats.topK(docs, "text", 3, 25,
-      tieGuardStatsBytes = -1L)
+      forceGuarded = true)
     assert(rows(fast) == rows(guarded))
     // route observability: both routes serve the kept hashes from a
     // LocalTableScan broadcast; neither recomputes the count aggregate

@@ -189,4 +189,31 @@ class PipelineDagSpec extends AnyFunSuite {
     }
     assert(n == 3 && e.getMessage.contains("3 attempts"))
   }
+
+  test("withRetries fails at once on deterministic errors, without a backoff sleep") {
+    def failsWith(err: => Throwable): (Throwable, Int, Long) = {
+      var n = 0
+      val t0 = System.nanoTime()
+      val e = intercept[Throwable] {
+        withRetries(maxRetries = 3, delayMs = 5000) { n += 1; throw err }
+      }
+      (e, n, (System.nanoTime() - t0) / 1000000L)
+    }
+    val (bad, n1, ms1) = failsWith(new IllegalArgumentException("bad arg"))
+    assert(bad.isInstanceOf[IllegalArgumentException] && n1 == 1 && ms1 < 4000, (n1, ms1))
+    val (unresolved, n2, ms2) = failsWith(
+      intercept[org.apache.spark.sql.AnalysisException](spark.range(1).select("nope")))
+    assert(unresolved.isInstanceOf[org.apache.spark.sql.AnalysisException] &&
+      n2 == 1 && ms2 < 4000, (n2, ms2))
+    // an interrupt is never retried, and the thread stays interrupted
+    val (interrupted, n3, ms3) = failsWith(new InterruptedException("stop"))
+    assert(Thread.interrupted(), "interrupt flag must be re-set")
+    assert(interrupted.isInstanceOf[InterruptedException] && n3 == 1 && ms3 < 4000, (n3, ms3))
+    // fatal errors propagate untouched
+    var n4 = 0
+    intercept[StackOverflowError] {
+      withRetries(maxRetries = 3, delayMs = 5000) { n4 += 1; throw new StackOverflowError() }
+    }
+    assert(n4 == 1)
+  }
 }

@@ -841,4 +841,38 @@ class PipelineJsonSpec extends AnyFunSuite {
     // books' share is realized by keeping (close to) all of it
     assert(out.nonEmpty && out.forall(_ == "books"))
   }
+
+  test("a pipeline run releases every stage it persisted once its sinks finish") {
+    val dir = Files.createTempDirectory("graft_pj_cache")
+    val in = dir.resolve("docs").toString
+    val body = (0 until 40).map(i => s"unique words number $i about topic ${i % 5} here")
+    val docs = body.zipWithIndex.map { case (t, i) => (i.toLong, s"shared banner\n$t") } ++
+      Seq((100L, s"shared banner\n${body(3)}"), // exact copy of doc 3
+        (101L, s"shared banner\n${body(4)} extra")) // near copy of doc 4
+    docs.toDF("id", "text").write.parquet(in)
+    val json = s"""{
+      "nodes": [
+        {"id": "in", "type": "file_input", "data": {"config": {"path": "$in", "format": "parquet"}}},
+        {"id": "exact", "type": "exact_dedup", "data": {"config": {"id_column": "id", "column": "text"}}},
+        {"id": "near", "type": "minhash_dedup",
+         "data": {"config": {"id_column": "id", "column": "text", "threshold": 0.7}}},
+        {"id": "lines", "type": "line_dedup",
+         "data": {"config": {"id_column": "id", "column": "text", "min_docs": 20}}},
+        {"id": "out", "type": "file_output",
+         "data": {"config": {"path": "${dir.resolve("out")}", "format": "parquet"}}}
+      ],
+      "edges": [{"source": "in", "target": "exact"}, {"source": "exact", "target": "near"},
+                {"source": "near", "target": "lines"}, {"source": "lines", "target": "out"}]
+    }"""
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+    val r = PipelineJson.run(spark, json)
+    assert(r.nodeLog.contains("out" -> "sink ok"), r.nodeLog)
+    assert(spark.sparkContext.getPersistentRDDs.isEmpty,
+      spark.sparkContext.getPersistentRDDs.values.mkString(", "))
+    // the outputs stay readable: exact + near copies gone, banner cut
+    val out = spark.read.parquet(dir.resolve("out").toString)
+    assert(out.count() == 40L)
+    assert(out.filter(col("clean_text").contains("banner")).isEmpty)
+  }
 }
