@@ -17,7 +17,7 @@ import org.apache.spark.sql.SparkSession
   * only through method parameters), so a cluster operator could not
   * re-dial them without a code change; now one `spark.conf.set` (or a
   * `--conf spark.graft.…` at submit) moves a route for the whole
-  * session, and an explicit method parameter still wins over both.
+  * session; each threshold has this one setting.
   *
   * Values accept Spark's usual byte-suffix syntax (`64m`, `1g`,
   * plain bytes) for the byte keys and plain longs for the count keys.
@@ -84,9 +84,7 @@ object Conf {
   val LineFrequentLocalLimitKey = "spark.graft.lineFrequentLocalLimit"
 
   /** Byte-valued knob: session conf wins when set (Spark byte-suffix
-    * syntax allowed), else `default`. Callers that take the knob as a
-    * method parameter pass `< 0` to mean "resolve from conf" so an
-    * explicit argument still overrides everything.
+    * syntax allowed), else `default`.
     */
   def bytes(spark: SparkSession, key: String, default: Long): Long =
     spark.conf.getOption(key)

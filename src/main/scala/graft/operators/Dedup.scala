@@ -1000,14 +1000,10 @@ object Dedup {
     * fixed-width and combinable, so a real cluster spreads either
     * shape — this routes the SINGLE-BOX class back to ~linear.
     */
-  private[operators] def dupSpanFirsts(grams: DataFrame, inputBytes: BigInt,
-      shuffleBytes: Long = -1L): DataFrame = {
-    // shuffleBytes < 0 (the default) resolves through session conf
-    // (r15): spark.graft.postingShuffleBytes > [[PostingShuffleBytes]].
-    val route =
-      if (shuffleBytes >= 0) shuffleBytes
-      else graft.Conf.bytes(grams.sparkSession,
-        graft.Conf.PostingShuffleBytesKey, PostingShuffleBytes)
+  private[operators] def dupSpanFirsts(grams: DataFrame, inputBytes: BigInt): DataFrame = {
+    // session conf (r15): spark.graft.postingShuffleBytes > [[PostingShuffleBytes]]
+    val route = graft.Conf.bytes(grams.sparkSession,
+      graft.Conf.PostingShuffleBytesKey, PostingShuffleBytes)
     val base =
       if (inputBytes <= route) grams
       else grams.repartition(

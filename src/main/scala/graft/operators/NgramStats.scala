@@ -255,7 +255,7 @@ object NgramStats {
   }
 
   /** Stats-routed default (r14, the r13 verdict's item 2): EXACT
-    * [[topK]] below `routeBytes` of input (Catalyst plan stats — the
+    * [[topK]] up to the route threshold (Catalyst plan stats — the
     * same cost-based device as [[Dedup.TwoPassBucketBytes]]),
     * [[topKSketch]] above it. The exact path's open-vocabulary
     * aggregate is the right plan while the distinct-gram table fits
@@ -265,19 +265,15 @@ object NgramStats {
     * recounted results — spec-pinned equal to exact on the profiled
     * star. Callers who KNOW their cluster spreads the exact aggregate
     * (it is partial-combinable) override by calling [[topK]]
-    * directly; `routeBytes` is the explicit dial, and `routeBytes < 0`
-    * (the default) resolves `spark.graft.ngramSketchRouteBytes` from
-    * session conf before falling back to [[SketchRouteBytes]] (r15 —
+    * directly; the crossover is `spark.graft.ngramSketchRouteBytes`
+    * from session conf, falling back to [[SketchRouteBytes]] (r15 —
     * cluster operators re-dial the crossover without a code change).
     */
   def topKAuto(df: DataFrame, textCol: String, n: Int, k: Int,
       maxMapSize: Int = 65536,
-      gramCol: String = "gram", countCol: String = "n",
-      routeBytes: Long = -1L): DataFrame = {
-    val route =
-      if (routeBytes >= 0) routeBytes
-      else graft.Conf.bytes(df.sparkSession,
-        graft.Conf.SketchRouteBytesKey, SketchRouteBytes)
+      gramCol: String = "gram", countCol: String = "n"): DataFrame = {
+    val route = graft.Conf.bytes(df.sparkSession,
+      graft.Conf.SketchRouteBytesKey, SketchRouteBytes)
     val inputBytes: BigInt = df.queryExecution.optimizedPlan.stats.sizeInBytes
     org.slf4j.LoggerFactory.getLogger(getClass).info(
       s"topKAuto: input ~$inputBytes B vs route $route B -> " +

@@ -34,6 +34,14 @@ object Similarity {
     r.getInt(0)
   }
 
+  /** LSH bucket ids are Int sign patterns: past 30 planes `1 << numPlanes`
+    * and [[bucketExpr]]'s `1 << i` overflow (an empty probe range,
+    * colliding bucket ids, a single index writer) — a wrong answer, not
+    * an error, so the entry points reject the dial up front.
+    */
+  private def requirePlanes(numPlanes: Int): Unit =
+    require(1 <= numPlanes && numPlanes <= 30, s"numPlanes must be in [1, 30], got $numPlanes")
+
   /** Deterministic unit-free hyperplanes: planes(p)(j) ∈ [-0.5, 0.5). */
   def hyperplanes(numPlanes: Int, dim: Int, seed: Long = 42L): Array[Array[Double]] = {
     val rnd = new scala.util.Random(seed)
@@ -125,6 +133,7 @@ object Similarity {
       df: DataFrame, idCol: String, vecCol: String,
       query: Array[Float], k: Int,
       numPlanes: Int = 8, probeHamming: Int = 1, seed: Long = 42L): DataFrame = {
+    requirePlanes(numPlanes)
     val dim = query.length
     val planes = hyperplanes(numPlanes, dim, seed)
     val qBucket = bucketOf(query, planes)
@@ -161,6 +170,7 @@ object Similarity {
   def lshIndex(
       df: DataFrame, idCol: String, vecCol: String, path: String,
       numPlanes: Int = 8, seed: Long = 42L, dim: Option[Int] = None): LshIndex = {
+    requirePlanes(numPlanes)
     val d = dim.getOrElse(probeDim(df, vecCol))
     val planes = hyperplanes(numPlanes, d, seed)
     df.select(col(idCol), col(vecCol),
@@ -587,15 +597,11 @@ object Similarity {
     */
   private[graft] def dropWithinCells(
       df: DataFrame, idCol: String, vecCol: String, assigned: DataFrame,
-      threshold: Double, maxCellSize: Int,
-      walkRouteBytes: Long = -1L): DataFrame = {
-    // walkRouteBytes < 0 (the default) resolves through session conf
-    // (r15): explicit argument > spark.graft.cellWalkShuffleBytes >
-    // the box-calibrated [[CellWalkShuffleBytes]] constant.
-    val routeBytes =
-      if (walkRouteBytes >= 0) walkRouteBytes
-      else graft.Conf.bytes(df.sparkSession,
-        graft.Conf.CellWalkBytesKey, CellWalkShuffleBytes)
+      threshold: Double, maxCellSize: Int): DataFrame = {
+    // session conf (r15): spark.graft.cellWalkShuffleBytes > the
+    // box-calibrated [[CellWalkShuffleBytes]] constant
+    val routeBytes = graft.Conf.bytes(df.sparkSession,
+      graft.Conf.CellWalkBytesKey, CellWalkShuffleBytes)
     val prepped = assigned
       .select(col(idCol).as("_id"), col(vecCol).as("_v"), col("_cell"))
       .withColumn("_nm", norm(col("_v")))
@@ -968,6 +974,7 @@ object Similarity {
       threshold: Double = 0.95, numPlanes: Int = 0, seed: Long = 42L,
       maxBucketSize: Int = 1000, dim: Option[Int] = None,
       expectedRows: Option[Long] = None): DataFrame = {
+    if (numPlanes > 0) requirePlanes(numPlanes)
     // callers that know the embedding width pass it and skip a driver
     // probe job; the probes stay as the convenience fallback. When
     // BOTH the width and the row count must be probed, ONE full-scan

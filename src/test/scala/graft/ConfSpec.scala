@@ -13,10 +13,7 @@ import graft.operators.{Dedup, NgramStats, Similarity}
 class ConfSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
-
-  private def withConf[A](key: String, value: String)(body: => A): A =
-    try { spark.conf.set(key, value); body }
-    finally spark.conf.unset(key)
+  import TestSpark.withConf
 
   test("byte and count knobs parse Spark suffix syntax and fall back to defaults") {
     assert(Conf.bytes(spark, Conf.CellWalkBytesKey, 123L) == 123L)

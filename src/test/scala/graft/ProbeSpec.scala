@@ -1,7 +1,7 @@
 package graft
 
 import java.util.concurrent.atomic.AtomicInteger
-import org.apache.spark.graftbridge.ListenerDrain
+import org.apache.spark.sql.graftbridge.ListenerDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions.udf

@@ -13,4 +13,9 @@ object TestSpark {
     s.sparkContext.setLogLevel("WARN")
     s
   }
+
+  /** `body` with session conf `key` set to `value`, unset afterwards. */
+  def withConf[A](key: String, value: String)(body: => A): A =
+    try { spark.conf.set(key, value); body }
+    finally spark.conf.unset(key)
 }

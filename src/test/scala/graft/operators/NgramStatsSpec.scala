@@ -78,9 +78,10 @@ class NgramStatsSpec extends AnyFunSuite {
     val exact = rows(NgramStats.topK(docs, "text", 3, 40))
     // default route at gate SF = exact (input way under 64 MB)
     assert(rows(NgramStats.topKAuto(docs, "text", 3, 40)) == exact)
-    // forced sketch route (routeBytes = 0): same table, exact counts
-    assert(rows(NgramStats.topKAuto(docs, "text", 3, 40, routeBytes = 0L))
-      == exact)
+    // forced sketch route (route threshold 0): same table, exact counts
+    assert(TestSpark.withConf(graft.Conf.SketchRouteBytesKey, "0") {
+      rows(NgramStats.topKAuto(docs, "text", 3, 40))
+    } == exact)
   }
 
   test("tie-volume guard: past the cap the recount degrades to a shuffled join") {

@@ -146,9 +146,11 @@ class SimilaritySpec extends AnyFunSuite {
         .toDF("vec_id", "embedding", "_cell"))
     val df = withNull.select("vec_id", "embedding")
     def kept(routeBytes: Long): Set[Long] =
-      Similarity.dropWithinCells(df, "vec_id", "embedding", withNull,
-          threshold = 0.999, maxCellSize = 4, walkRouteBytes = routeBytes)
-        .select("vec_id").as[Long].collect().toSet
+      TestSpark.withConf(graft.Conf.CellWalkBytesKey, routeBytes.toString) {
+        Similarity.dropWithinCells(df, "vec_id", "embedding", withNull,
+            threshold = 0.999, maxCellSize = 4)
+          .select("vec_id").as[Long].collect().toSet
+      }
     val viaList = kept(Long.MaxValue) // collect_list + native SemanticDrops
     val viaStream = kept(0L)          // forced streamed route
     assert(viaList == viaStream, s"routes disagree: $viaList vs $viaStream")
@@ -375,6 +377,17 @@ class SimilaritySpec extends AnyFunSuite {
     val scanLine = plan.linesIterator.find(_.contains("PartitionFilters"))
       .getOrElse(fail("no PartitionFilters:\n" + plan.take(3000)))
     assert(scanLine.contains("_cell"), scanLine)
+  }
+
+  test("numPlanes past 30 is rejected at every LSH entry point (Int bucket ids overflow)") {
+    val q = Array(1.0f, 0.0f, 0.0f, 0.0f)
+    val dir = java.nio.file.Files.createTempDirectory("graft_lsh_planes").toString
+    intercept[IllegalArgumentException](
+      Similarity.lshTopK(vecs, "vec_id", "embedding", q, k = 3, numPlanes = 31))
+    intercept[IllegalArgumentException](
+      Similarity.lshIndex(vecs, "vec_id", "embedding", dir, numPlanes = 31))
+    intercept[IllegalArgumentException](
+      Similarity.embeddingNearDups(vecs, "vec_id", "embedding", numPlanes = 31))
   }
 
   test("bucketExpr and bucketOf agree (query routing = data bucketing)") {
